@@ -15,9 +15,11 @@ Two studies over sinks/acid.py:
          stream_acid_merge shape — foreachBatch serializes commits, so a
          driver-side loop over acid_merge_upsert measures the same path
          without streaming-engine overhead). Records, at checkpoints,
-         the per-commit wall, the _commits/ marker count + listStatus
-         time (paid by EVERY commit's ordinal resolution), manifest
-         entries + JSON bytes, and data/ file count. Arms:
+         the per-commit wall and Spark jobs (one job group per commit,
+         so work moved shows beside wall time), the _commits/ marker
+         count + listStatus time (paid by EVERY commit's ordinal
+         resolution), manifest entries + JSON bytes, and data/ file
+         count. Arms:
            none         no maintenance — every fixed cost grows with N
            maintained   vacuum_every=50 keep=2 + compact_every=50
          The VERDICT r11 item-7 soak; the retention-policy numbers in
@@ -184,12 +186,18 @@ def _churn_arm(spark, root, arm: str, n_commits: int, batch_rows: int,
     acid.acid_merge_upsert(spark, tbl, seeded, ["id"], file_cow=True)
     rows_out = []
     win: list[float] = []
+    jobs: list[int] = []
     fs, jvm = acid._fs(spark, tbl)
+    sc = spark.sparkContext
     for b in range(1, n_commits + 1):
         batch = _churn_batch(spark, b, batch_rows, key_span)
+        # one job group per commit: the Spark work it did, beside its wall
+        group = f"churn-{arm}-{b}"
+        sc.setJobGroup(group, f"churn commit {b}")
         t0 = time.monotonic()
         rep = acid.acid_merge_upsert(spark, tbl, batch, ["id"], file_cow=True)
         win.append(time.monotonic() - t0)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
         if arm == "maintained" and b % 50 == 0:
             acid.acid_compact(spark, tbl, target_rows=1_000_000)
             acid.acid_vacuum(spark, tbl, keep=2)
@@ -205,6 +213,8 @@ def _churn_arm(spark, root, arm: str, n_commits: int, batch_rows: int,
                 "study": "churn", "arm": arm, "commit": b,
                 "commit_sec_median_win": round(sorted(win)[len(win) // 2], 3),
                 "commit_sec_last": round(win[-1], 3),
+                "commit_jobs_median_win": sorted(jobs)[len(jobs) // 2],
+                "commit_jobs_last": jobs[-1],
                 "n_markers": len(markers),
                 "markers_list_sec": round(list_sec, 4),
                 "manifest_files": len(man["files"]),
@@ -214,7 +224,7 @@ def _churn_arm(spark, root, arm: str, n_commits: int, batch_rows: int,
             }
             print(json.dumps(row), flush=True)
             rows_out.append(row)
-            win = []
+            win, jobs = [], []
     total = acid.acid_read(spark, tbl).count()
     print(json.dumps({"study": "churn", "arm": arm, "final_rows": total}),
           flush=True)

@@ -632,5 +632,9 @@ def plan_fingerprint(df) -> str:
     s = _analyzed_plan_string(df)
     s = re.sub(r"lambda (\w+?)_\d+#", r"lambda \1#", s)
     s = re.sub(r"\b(Repartition) \d+", r"\1 N", s)
-    s = re.sub(r"\b(RepartitionByExpression \[[^\]]*\]), \d+", r"\1, N", s)
+    # anchored on the line's trailing "], <n>": a key expression may hold
+    # "]" itself (an array index such as a#[0])
+    s = re.sub(
+        r"\b(RepartitionByExpression \[.*\]), \d+$", r"\1, N", s, flags=re.M
+    )
     return hashlib.md5(s.encode()).hexdigest()[:12]

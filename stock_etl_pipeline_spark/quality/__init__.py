@@ -169,6 +169,15 @@ def validate_prices(
     """Full price-table quality suite — Q1–Q12 with at most TWO jobs:
     the fused aggregate, plus (only if ``required_symbols``) one tiny
     distinct-symbols job for coverage. Schema checks run no job.
+
+    Rows whose dedup key (``DEDUP_KEYS``) has a NULL part count as a key
+    of their own in ``n_duplicate_rows``: the metrics come from a
+    groupBy over the key (``quality_metrics_df``), which keeps a NULL
+    group, so two rows with a NULL ``symbol`` and the same date and
+    source are one duplicate. The flat ``count_distinct`` used before
+    round 14 dropped NULL-key rows, so each of them counted as a
+    duplicate. The DuckDB oracle's ``count(DISTINCT (row))`` agrees with
+    the groupBy.
     """
     report = QualityReport()
 

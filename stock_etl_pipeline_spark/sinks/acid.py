@@ -92,16 +92,26 @@ file_cow=True)`` instead publishes a MANIFEST snapshot::
     <table>/snap-N/_meta.json
 
 - The manifest lists the data files composing the snapshot with per-file
-  row counts and per-key-column min/max bounds (computed once, from ONE
-  aggregate over just-written files; untouched files carry their stats
-  forward by reference).
-- A merge commit finds the files actually containing merged keys in two
-  stages: driver-side BOUNDS pruning (files whose key ranges cannot
-  intersect the source's are untouched without any read), then a
-  column-pruned key scan of only the candidate files semi-joined to the
-  source keys. Untouched files move to the new manifest unchanged; only
+  row counts and per-key-column min/max bounds (integral, float, string
+  and date keys — dates as ISO strings). They are read from the new
+  files' parquet FOOTERS, with no Spark job and no read-back; untouched
+  files carry their stats forward by reference.
+- A merge commit evaluates its batch ONCE: it persists the batch for the
+  duration of the call (unless the caller already did) and drops it
+  before returning, conflict retries included. One collect of the
+  batch's keys feeds both stages of finding the files that actually
+  contain merged keys: driver-side BOUNDS pruning (files whose key
+  ranges cannot intersect the batch's are untouched without any read),
+  then a column-pruned key scan of only the candidate files semi-joined
+  to a broadcast relation of those keys, collecting file names with no
+  shuffle. Untouched files move to the new manifest unchanged; only
   touched files are rewritten (their rows EXCEPT-merged-keys, union the
   source) — commit cost scales with TOUCHED files, not table size.
+- Job budget of one merge commit whose batch lineage holds a dedup
+  shuffle (the daily batch): 7 Spark jobs — key collect (2), probe
+  broadcast and scan (2), rewrite (3); pinned in
+  tests/test_sources_sinks.py. A compaction commit runs only its
+  rewrite.
 - The publish protocol is byte-identical to table COW: stage (tiny —
   two JSON files), marker, rename. Readers resolve a manifest snapshot
   to its data-file list once; the files are immutable, so snapshot
@@ -505,14 +515,16 @@ def acid_commit(
         # files); the final snap-<ordinal> path is claimed via the marker
         stage = f"{table.rstrip('/')}/__stage-{tag}"
         df.write.mode("overwrite").parquet(stage)
-        n = spark.read.parquet(stage).count()  # count the immutable files
+        n = sum(f["rows"] for f in _footer_stats(spark, stage).values())
         # metadata lands INSIDE the snapshot before the marker publishes it
         be.write_json(stage + "/_meta.json", {**meta, "rows": n})
         _claim_and_publish(spark, table, stage, ordinal, commit_uuid=tag, be=be)
     else:
         def _content(snap: str) -> dict:
             df.write.mode("overwrite").parquet(snap)
-            meta["rows"] = spark.read.parquet(snap).count()
+            meta["rows"] = sum(
+                f["rows"] for f in _footer_stats(spark, snap).values()
+            )
             return meta
 
         _claim_marker(table, ordinal, be, tag)
@@ -688,59 +700,175 @@ def _claim_and_publish(
             )
 
 
+def _bound_value(v):
+    """A key value in the manifest's bounds encoding: ints, floats and
+    strings as themselves, dates as ISO ``YYYY-MM-DD`` strings (which
+    order like the dates); None for anything else — NULL, NaN, bool,
+    timestamp, decimal — which then gets no bound (never a wrong one)."""
+    import datetime
+    import math
+
+    if isinstance(v, bool):
+        return None
+    if isinstance(v, float):
+        return None if math.isnan(v) else v
+    if isinstance(v, (int, str)):
+        return v
+    if isinstance(v, datetime.date) and not isinstance(v, datetime.datetime):
+        return v.isoformat()
+    return None
+
+
+def _footer_decoder(dt):
+    """Decoder from a parquet statistic's min/max bytes (parquet-mr's
+    little-endian plain encoding) to the bounds encoding, for key type
+    ``dt``; None for types that carry no bounds."""
+    import datetime
+    import struct
+
+    from pyspark.sql.types import (
+        DateType,
+        DoubleType,
+        FloatType,
+        IntegralType,
+        StringType,
+    )
+
+    if isinstance(dt, IntegralType):
+        return lambda b: int.from_bytes(b, "little", signed=True)
+    if isinstance(dt, DoubleType):
+        return lambda b: _bound_value(struct.unpack("<d", b)[0])
+    if isinstance(dt, FloatType):
+        return lambda b: _bound_value(struct.unpack("<f", b)[0])
+    if isinstance(dt, DateType):
+        epoch = datetime.date(1970, 1, 1)
+
+        def date_iso(b):
+            days = int.from_bytes(b, "little", signed=True)
+            try:
+                return (epoch + datetime.timedelta(days=days)).isoformat()
+            except OverflowError:  # outside Python's year range
+                return None
+
+        return date_iso
+    # byte order is the bounds' order only under the binary collation
+    if isinstance(dt, StringType) and dt.collation == "UTF8_BINARY":
+        return lambda b: b.decode("utf-8")
+    return None
+
+
+def _footer_stats(
+    spark: SparkSession, directory: str, keys: Sequence[str] = (),
+    schema=None,
+) -> dict:
+    """{file name: {"rows", "bounds"}} for every parquet data file directly
+    in ``directory``, from the files' parquet FOOTERS — no Spark job, no
+    data read. The footers are read through the directory's Hadoop
+    FileSystem (parquet-mr ``ParquetFileReader.open`` over a
+    ``HadoopInputFile``), so one code path serves every scheme at
+    O(files) cost.
+
+    Rows are the sum of the row groups' row counts. Bounds ({key: [lo,
+    hi]}) are typed by ``schema`` (the table's pinned schema): integral →
+    int, float/double → float, string → str, date → ISO string; other
+    types get none. A file gets no bound for a key when any of its
+    non-NULL chunks of that column lacks min/max statistics (parquet-mr
+    writes none for a chunk holding NaN, or for oversized values); an
+    all-NULL chunk contributes nothing. A missing bound only costs
+    pruning — the exact key scan still runs on every candidate file."""
+    fs, jvm = _fs(spark, directory)
+    conf = spark._jsc.hadoopConfiguration()
+    parquet = jvm.org.apache.parquet.hadoop
+    fields = schema.fields if schema else []
+    types = {f.name.lower(): f.dataType for f in fields}
+    decoders = {}
+    for k in keys:
+        dt = types.get(k.lower())
+        dec = _footer_decoder(dt) if dt is not None else None
+        if dec is not None:
+            decoders[k.lower()] = (k, dec)
+    out: dict = {}
+    for st in fs.listStatus(_hpath(jvm, directory)):
+        name = st.getPath().getName()
+        if not st.isFile() or name.startswith(("_", ".")):
+            continue  # _SUCCESS, _meta.json, .crc sidecars
+        reader = parquet.ParquetFileReader.open(
+            parquet.util.HadoopInputFile.fromStatus(st, conf)
+        )
+        try:
+            blocks = list(reader.getFooter().getBlocks())
+        finally:
+            reader.close()
+        rows = 0
+        lo: dict = {}
+        hi: dict = {}
+        unknown: set = set()
+        for b in blocks:
+            n = b.getRowCount()
+            rows += n
+            if not decoders:
+                continue
+            for c in b.getColumns():
+                key = c.getPath().toDotString().lower()
+                if key not in decoders or key in unknown:
+                    continue
+                s = c.getStatistics()
+                if not s.hasNonNullValue():
+                    if not (s.isNumNullsSet() and s.getNumNulls() == n):
+                        unknown.add(key)  # values present, no min/max
+                    continue
+                dec = decoders[key][1]
+                a, z = dec(bytes(s.getMinBytes())), dec(bytes(s.getMaxBytes()))
+                if a is None or z is None:
+                    unknown.add(key)
+                    continue
+                lo[key] = a if key not in lo else min(lo[key], a)
+                hi[key] = z if key not in hi else max(hi[key], z)
+        bounds = {
+            decoders[key][0]: [lo[key], hi[key]]
+            for key in lo
+            if key not in unknown
+        }
+        out[name] = {"rows": rows, "bounds": bounds}
+    return out
+
+
 def _write_data_files(
     spark: SparkSession, table: str, df: DataFrame, keys: Sequence[str],
-    be=None,
+    schema_json: str, be=None,
 ) -> dict:
     """Write ``df`` as new immutable files in the table's shared ``data/``
-    dir and return their manifest entries {name: {"rows", "bounds"}}.
-    Stats (row count + per-key min/max) come from ONE aggregate over the
-    just-written files — never a second full-table pass. Files land in
-    data/ BEFORE any marker: a crashed/conflicted commit leaves them as
-    unreferenced orphans that acid_vacuum sweeps. The stage→data move is
-    one rename per FILE — on an object-store backend that is a single
-    server-side COPY each (atomic per object), never a directory rename."""
+    dir and return their manifest entries {name: {"rows", "bounds"}},
+    taken from the new files' parquet footers (_footer_stats, bounds typed
+    by the pinned schema) — the write is the only Spark work. Files
+    land in data/ BEFORE any marker: a crashed/conflicted commit leaves
+    them as unreferenced orphans that acid_vacuum sweeps. The stage→data
+    move is one rename per FILE — on an object-store backend that is a
+    single server-side COPY each (atomic per object), never a directory
+    rename. Zero-row files are left in the stage and deleted with it."""
     import uuid
 
-    from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
 
     be = be or _backend(spark, table)
     tag = uuid.uuid4().hex
     stage = f"{table.rstrip('/')}/__stage-{tag}"
     df.write.mode("overwrite").parquet(stage)
-    aggs = [F.count(F.lit(1)).alias("_rows")]
-    for k in keys:
-        aggs.append(F.min(k).alias(f"_lo_{k}"))
-        aggs.append(F.max(k).alias(f"_hi_{k}"))
-    stats = (
-        spark.read.parquet(stage)
-        .groupBy(F.input_file_name().alias("_file"))
-        .agg(*aggs)
-        .collect()  # bounded: one row per written file
-    )
+    schema = StructType.fromJson(json.loads(schema_json))
+    stats = _footer_stats(spark, stage, keys, schema)
     ddir = _data_dir(table)
     be.mkdirs(ddir)
     files: dict = {}
-    for r in stats:
-        base = r["_file"].split("/")[-1]
+    for base, st in sorted(stats.items()):
+        if not st["rows"]:
+            continue
         name = f"{tag}-{base}"  # commit-unique: no collision in data/
         if not be.rename(f"{stage}/{base}", f"{ddir}/{name}"):
             raise RuntimeError(
                 f"table {table!r}: staging {stage}/{base} -> data/{name} "
                 f"rename failed"
             )
-        bounds = {}
-        for k in keys:
-            lo, hi = r[f"_lo_{k}"], r[f"_hi_{k}"]
-            # bounds only for JSON-faithful types; others stay unpruned
-            # (the exact key scan still resolves them)
-            if (
-                isinstance(lo, (int, float, str))
-                and isinstance(hi, (int, float, str))
-                and not isinstance(lo, bool)
-            ):
-                bounds[k] = [lo, hi]
-        files[name] = {"rows": r["_rows"], "bounds": bounds}
+        files[name] = st
     be.delete(stage, recursive=True)  # empty shell (+ zero-row parts)
     return files
 
@@ -751,34 +879,39 @@ def _touched_file_names(
     manifest: dict,
     source: DataFrame,
     keys: Sequence[str],
-) -> set[str]:
-    """Manifest files that actually contain one of the source's merge keys
-    — the ONLY files a file-COW merge rewrites. Two stages: driver-side
-    bounds pruning (a file whose per-key min/max cannot intersect the
-    source's key range is untouched with zero reads), then a
-    column-pruned key scan of the candidate files semi-joined to the
-    distinct source keys (broadcast: daily upsert keys are bounded by
-    construction — the same contract as operators/upsert.py)."""
+) -> tuple[set[str], int]:
+    """(manifest files that actually contain one of the source's merge
+    keys — the ONLY files a file-COW merge rewrites —, number of files
+    probed). The batch's keys are collected ONCE (bounded by
+    construction: daily upsert keys are the same bound the broadcast
+    below assumes, the contract of operators/upsert.py; duplicates are
+    harmless to a semi-join and left in) and feed both
+    stages: driver-side bounds pruning (a file whose per-key min/max
+    cannot intersect the batch's key range is untouched with zero reads),
+    then a column-pruned key scan of the candidate files semi-joined to a
+    broadcast relation of those keys. The scan collects each matched
+    row's file name with no shuffle: a table MERGE maintains holds each
+    key once, so that is at most one row per batch key."""
     from pyspark.sql import functions as F
 
     files = manifest["files"]
-    sb = source.select(
-        *[
-            f
-            for k in keys
-            for f in (F.min(k).alias(f"_lo_{k}"), F.max(k).alias(f"_hi_{k}"))
-        ]
-    ).collect()[0]
+    key_df = source.select(*keys)
+    batch = key_df.collect()
+    if not batch:
+        return set(), 0
+    sb = {}
+    for i, k in enumerate(keys):
+        vals = [_bound_value(r[i]) for r in batch]
+        vals = [v for v in vals if v is not None]
+        if vals:
+            sb[k] = (min(vals), max(vals))
 
     def may_contain(name: str) -> bool:
         b = files[name].get("bounds") or {}
         for k in keys:
-            if k not in b:
+            if k not in b or k not in sb:
                 continue  # no stats for this column: cannot prune on it
-            slo, shi = sb[f"_lo_{k}"], sb[f"_hi_{k}"]
-            if slo is None or shi is None:
-                continue
-            lo, hi = b[k]
+            (lo, hi), (slo, shi) = b[k], sb[k]
             try:
                 if hi < slo or lo > shi:
                     return False
@@ -788,17 +921,16 @@ def _touched_file_names(
 
     candidates = [n for n in files if may_contain(n)]
     if not candidates:
-        return set()
+        return set(), 0
     scan = _read_manifest_files(spark, table, manifest, candidates)
-    src_keys = source.select(*keys).dropDuplicates(list(keys))
+    src_keys = spark.createDataFrame(batch, key_df.schema)
     hit = (
         scan.select(*keys, F.input_file_name().alias("_file"))
         .join(F.broadcast(src_keys), list(keys), "left_semi")
         .select("_file")
-        .distinct()
-        .collect()  # bounded: at most one row per candidate file
+        .collect()  # bounded: at most one row per batch key
     )
-    return {r["_file"].split("/")[-1] for r in hit}
+    return {r["_file"].split("/")[-1] for r in hit}, len(candidates)
 
 
 def _commit_manifest(
@@ -1041,12 +1173,18 @@ def acid_merge_upsert(
     strict default keeps today's contract — extra source columns are
     dropped by the MERGE projection. Old snapshots keep their
     at-commit schema (time travel is schema-faithful)."""
+    from pyspark import StorageLevel
+
     from ..operators.upsert import merge_upsert
 
-    def _merge_against_snapshot(parent: int) -> DataFrame:
+    def _merge_against_snapshot(parent: int, man: dict | None) -> DataFrame:
         # shared by the table-COW path and the file-COW conversion commit:
-        # read the parent snapshot, apply evolution, MERGE
-        target = spark.read.parquet(_snap_dir(table, parent))
+        # read the parent snapshot (either layout: a table-COW commit may
+        # land on a manifest parent), apply evolution, MERGE
+        if man is not None:
+            target = _read_manifest_files(spark, table, man)
+        else:
+            target = spark.read.parquet(_snap_dir(table, parent))
         if allow_new_columns:
             target = _widen_for_new_columns(target, source)
         return merge_upsert(target, source, keys)
@@ -1058,7 +1196,9 @@ def acid_merge_upsert(
             if parent == 0:
                 merged = source
             else:
-                merged = _merge_against_snapshot(parent)
+                merged = _merge_against_snapshot(
+                    parent, _manifest(spark, table, parent, be)
+                )
             try:
                 return acid_commit(
                     spark, table, merged,
@@ -1071,98 +1211,119 @@ def acid_merge_upsert(
             f"table {table!r}: lost the commit race {max_retries + 1} times"
         )
 
-    for _ in range(max_retries + 1):
-        parent = _current_ordinal(spark, table, be)
-        man = _manifest(spark, table, parent, be) if parent else None
-        untouched: dict = {}
-        n_rewritten = 0
-        if parent == 0:
-            merged = source
-        elif man is None:
-            # table-COW parent: one-time conversion commit (everything
-            # rewrites into data/ files; increments are file-level after)
-            merged = _merge_against_snapshot(parent)
-        else:
-            if allow_new_columns:
-                # widen the PINNED schema: touched files (and the empty
-                # insert relation) read through it below, untouched files
-                # carry forward and read NULL in the added columns
-                man = {
-                    **man,
-                    "schema": _widened_schema_json(
-                        man["schema"], source.schema
-                    ),
-                }
-            # conform BEFORE anything is written: a type-drifted batch
-            # either casts (safe widening) or fails loudly right here
-            source = _conform_source_to_pinned(source, man["schema"])
-            touched = _touched_file_names(spark, table, man, source, keys)
-            untouched = {
-                n: s for n, s in man["files"].items() if n not in touched
-            }
-            n_rewritten = len(touched)
-            # The rewrite region is touched-files ∪ batch — bounded by the
-            # merge contract (upsert batches broadcast). Fold it back to
-            # ~len(touched) output files so the per-commit file count
-            # tracks the TOUCHED data, not the source's incoming partition
-            # count (an 8-partition 200-row micro-batch would otherwise
-            # add 8 manifest entries per commit — measured in
-            # scripts/acid_lab.py --churn; acid_compact folds the residual
-            # one-file-per-insert-batch tail). Seed and conversion commits
-            # below keep the source's partitioning: they write the WHOLE
-            # table and must stay parallel.
-            if touched:
-                merged = merge_upsert(
-                    _read_manifest_files(spark, table, man, touched),
-                    source, keys,
-                ).coalesce(len(touched))
+    # the batch this call persisted (never a caller's own cache): the
+    # batch is fully consumed before the call returns, so it is dropped
+    # here — conflict retries included — not left to a later eviction
+    cached = None
+    try:
+        for _ in range(max_retries + 1):
+            parent = _current_ordinal(spark, table, be)
+            man = _manifest(spark, table, parent, be) if parent else None
+            untouched: dict = {}
+            n_rewritten = n_probed = 0
+            if parent == 0:
+                merged = source
+            elif man is None:
+                # table-COW parent: one-time conversion commit (everything
+                # rewrites into data/ files; increments are file-level after)
+                merged = _merge_against_snapshot(parent, None)
             else:
-                # pure insert: no file holds these keys — one log file.
-                # Still MERGE against an empty relation of the manifest's
-                # pinned schema so the semantics stay identical to
-                # table-COW: intra-batch duplicate keys dedupe keep-latest,
-                # and a schema-mismatched batch fails BEFORE committing
-                # instead of null-filling the table (code-review r12).
-                merged = merge_upsert(
-                    _read_manifest_files(spark, table, man, []),
-                    source, keys,
-                ).coalesce(1)
-        # cheap pre-write conflict probe: an unresolved marker above the
-        # parent (another merge in flight, or a crashed claim awaiting
-        # vacuum) fails HERE — one LIST — instead of after a full data-file
-        # write that the conflict would immediately orphan (code-review r13;
-        # _commit_manifest re-resolves authoritatively either way)
-        try:
-            _resolve_commit_ordinal(spark, table, parent, be)
-        except CommitConflict:
-            continue
-        new_files = _write_data_files(spark, table, merged, keys, be)
-        manifest = {
-            "files": {**untouched, **new_files},
+                if allow_new_columns:
+                    # widen the PINNED schema: touched files (and the empty
+                    # insert relation) read through it below, untouched files
+                    # carry forward and read NULL in the added columns
+                    man = {
+                        **man,
+                        "schema": _widened_schema_json(
+                            man["schema"], source.schema
+                        ),
+                    }
+                # conform BEFORE anything is written: a type-drifted batch
+                # either casts (safe widening) or fails loudly right here
+                source = _conform_source_to_pinned(source, man["schema"])
+                if cached is None and source.storageLevel == StorageLevel.NONE:
+                    # ONE evaluation of the batch for the key collect, the
+                    # probe and the rewrite (a non-deterministic source could
+                    # otherwise probe one key set and write another)
+                    cached = source = source.persist(
+                        StorageLevel.MEMORY_AND_DISK
+                    )
+                touched, n_probed = _touched_file_names(
+                    spark, table, man, source, keys
+                )
+                untouched = {
+                    n: s for n, s in man["files"].items() if n not in touched
+                }
+                n_rewritten = len(touched)
+                # The rewrite region is touched-files ∪ batch — bounded by the
+                # merge contract (upsert batches broadcast). Fold it back to
+                # ~len(touched) output files so the per-commit file count
+                # tracks the TOUCHED data, not the source's incoming partition
+                # count (an 8-partition 200-row micro-batch would otherwise
+                # add 8 manifest entries per commit — measured in
+                # scripts/acid_lab.py --churn; acid_compact folds the residual
+                # one-file-per-insert-batch tail). Seed and conversion commits
+                # below keep the source's partitioning: they write the WHOLE
+                # table and must stay parallel.
+                if touched:
+                    merged = merge_upsert(
+                        _read_manifest_files(spark, table, man, touched),
+                        source, keys,
+                    ).coalesce(len(touched))
+                else:
+                    # pure insert: no file holds these keys — one log file.
+                    # Still MERGE against an empty relation of the manifest's
+                    # pinned schema so the semantics stay identical to
+                    # table-COW: intra-batch duplicate keys dedupe keep-latest,
+                    # and a schema-mismatched batch fails BEFORE committing
+                    # instead of null-filling the table (code-review r12).
+                    merged = merge_upsert(
+                        _read_manifest_files(spark, table, man, []),
+                        source, keys,
+                    ).coalesce(1)
+            # cheap pre-write conflict probe: an unresolved marker above the
+            # parent (another merge in flight, or a crashed claim awaiting
+            # vacuum) fails HERE — one LIST — instead of after a full data-file
+            # write that the conflict would immediately orphan (code-review
+            # r13; _commit_manifest re-resolves authoritatively either way)
+            try:
+                _resolve_commit_ordinal(spark, table, parent, be)
+            except CommitConflict:
+                continue
             # pin the parent's schema when extending it — nullability
             # variations in a rewritten subset must not fork the table
-            "schema": man["schema"] if man else merged.schema.json(),
-            "keys": list(keys),
-        }
-        rows = sum(s["rows"] for s in manifest["files"].values())
-        try:
-            return _commit_manifest(
-                spark, table, manifest,
-                parent=parent, operation="merge", rows=rows,
-                extra={
-                    "files_total": len(manifest["files"]),
-                    "files_rewritten": n_rewritten,
-                    "files_new": len(new_files),
-                    **(extra or {}),
-                },
-                be=be,
+            schema = man["schema"] if man else merged.schema.json()
+            new_files = _write_data_files(
+                spark, table, merged, keys, schema, be
             )
-        except CommitConflict:
-            # this attempt's data files are unreferenced — drop them now
-            # instead of leaving orphans for vacuum
-            for n in new_files:
-                be.delete(f"{_data_dir(table)}/{n}")
-            continue
+            manifest = {
+                "files": {**untouched, **new_files},
+                "schema": schema,
+                "keys": list(keys),
+            }
+            rows = sum(s["rows"] for s in manifest["files"].values())
+            try:
+                return _commit_manifest(
+                    spark, table, manifest,
+                    parent=parent, operation="merge", rows=rows,
+                    extra={
+                        "files_total": len(manifest["files"]),
+                        "files_rewritten": n_rewritten,
+                        "files_probed": n_probed,
+                        "files_new": len(new_files),
+                        **(extra or {}),
+                    },
+                    be=be,
+                )
+            except CommitConflict:
+                # this attempt's data files are unreferenced — drop them now
+                # instead of leaving orphans for vacuum
+                for n in new_files:
+                    be.delete(f"{_data_dir(table)}/{n}")
+                continue
+    finally:
+        if cached is not None:
+            cached.unpersist()
     raise CommitConflict(
         f"table {table!r}: lost the commit race {max_retries + 1} times"
     )
@@ -1335,8 +1496,6 @@ def _compact_impl(
     zorder_cols: Sequence[str] | None,
     zorder_bits: int,
 ) -> dict:
-    from pyspark.sql import functions as F
-
     for _ in range(max_retries + 1):
         parent = _current_ordinal(spark, table, be)
         if parent == 0:
@@ -1372,7 +1531,9 @@ def _compact_impl(
             packed = packed.repartitionByRange(n_out, keys[0])
         else:
             packed = packed.repartition(n_out)
-        new_files = _write_data_files(spark, table, packed, keys, be)
+        new_files = _write_data_files(
+            spark, table, packed, keys, man["schema"], be
+        )
         manifest = {
             "files": {
                 **{n: s for n, s in man["files"].items() if n not in small},

@@ -376,6 +376,26 @@ def test_plan_fingerprint_partition_width_independent(spark):
     assert r8 != fingerprints.plan_fingerprint(base.repartitionByRange(8, "id"))
 
 
+def test_plan_fingerprint_partition_width_masked_past_array_index(spark):
+    """A repartition key holding "]" itself (an array index, a#[0]) must
+    not end the width mask early: the width is masked on the node line's
+    trailing "], <n>", and the key still moves the hash."""
+    base = spark.range(100).selectExpr("id", "array(id, id % 7) AS a")
+    h = [
+        fingerprints.plan_fingerprint(base.repartitionByRange(n, base.a[0]))
+        for n in (8, 32)
+    ]
+    assert h[0] == h[1]
+    assert h[0] != fingerprints.plan_fingerprint(
+        base.repartitionByRange(8, base.a[1])
+    )
+    m = [
+        fingerprints.plan_fingerprint(base.repartition(n, base.a[1], "id"))
+        for n in (8, 32)
+    ]
+    assert m[0] == m[1]
+
+
 def test_table_row_count_refuses_remote_schemes(tmp_path):
     """VERDICT r13 item 2: ``datasets.table_row_count`` must refuse
     non-local schemes up front (parity with ``_total_row_groups``) —

@@ -65,6 +65,17 @@ def test_duplicate_keys_warn_not_fail(spark):
     assert any("duplicate" in w for w in rep.warnings)
 
 
+def test_duplicate_rows_count_null_key_as_a_key(spark):
+    """Rows with a NULL dedup-key part form one key group: two NULL-symbol
+    rows on the same date and source are one duplicate (the flat
+    count_distinct before round 14 dropped both and reported two)."""
+    rep = validate_prices(
+        mk(spark, [row(sym=None), row(sym=None), row(sym="AAA")]), as_of=AS_OF
+    )
+    assert rep.metrics["row_count"] == 3
+    assert rep.metrics["n_duplicate_rows"] == 1
+
+
 def test_sanity_warnings(spark):
     rep = validate_prices(
         mk(spark, [row(c=20000.0, h=20000.0, v=2_000_000_000)]), as_of=AS_OF

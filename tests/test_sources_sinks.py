@@ -673,6 +673,25 @@ def test_acid_file_cow_conversion_vacuum_and_conflict_cleanup(spark, tmp_path):
     assert len(got) == 20
 
 
+def test_acid_table_cow_merge_onto_manifest_parent(spark, tmp_path):
+    """The layouts interoperate both ways: a table-COW merge whose parent
+    is a file-COW manifest snapshot reads the parent through its manifest
+    (the snapshot dir holds no parquet) and publishes a full snapshot."""
+    from stock_etl_pipeline_spark.sinks import acid
+
+    table = str(tmp_path / "tcow_on_man")
+    rows = lambda df: sorted((r["k"], r["v"]) for r in df.collect())
+    base = spark.createDataFrame(
+        [(i, f"v{i}") for i in range(6)], "k long, v string"
+    ).repartitionByRange(2, "k")
+    acid.acid_merge_upsert(spark, table, base, ["k"], file_cow=True)
+    up = spark.createDataFrame([(1, "U"), (9, "N")], "k long, v string")
+    rep = acid.acid_merge_upsert(spark, table, up, ["k"])
+    assert rep["ordinal"] == 2 and acid._manifest(spark, table, 2) is None
+    want = [(i, "U" if i == 1 else f"v{i}") for i in range(6)] + [(9, "N")]
+    assert rows(acid.acid_read(spark, table)) == want
+
+
 def test_acid_inflight_marker_blocks_conditional_commit(spark, tmp_path):
     """Lost-update race (ADVICE r11): while a commit holds marker N but has
     not renamed its snapshot yet, a conditional commit reading parent=N-1
@@ -1036,6 +1055,220 @@ def test_acid_compact_zorder_clusters_and_preserves_content(spark, tmp_path):
     assert stats["n_files"] == 5
     assert stats["candidate_fraction"] <= 0.6
     assert rows() == before  # still intact post-vacuum
+
+
+def _counting_jobs(spark):
+    """Context manager counting the Spark jobs its block runs (one job
+    group, cleared again on exit); the count lands in the yielded dict."""
+    import contextlib
+    import uuid
+
+    @contextlib.contextmanager
+    def ctx():
+        sc = spark.sparkContext
+        group = f"count-{uuid.uuid4().hex}"
+        out: dict = {}
+        sc.setJobGroup(group, "job count")
+        try:
+            yield out
+        finally:
+            for prop in ("spark.jobGroup.id", "spark.job.description",
+                         "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(prop, None)
+            out["jobs"] = len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return ctx()
+
+
+def _persisted_rdds(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_acid_file_cow_merge_job_budget_and_cache_hygiene(
+    spark, tmp_path, monkeypatch
+):
+    """A file-COW merge commit evaluates its batch ONCE: one key collect
+    feeds the bounds pruning and the broadcast probe, the probe collects
+    file names without a shuffle, and the new files' stats come from
+    their parquet footers — 7 Spark jobs for a batch with a dedup shuffle
+    in its lineage (13 before). The call persists the batch only when the
+    caller has not, and never leaves a persisted RDD behind — after a
+    normal merge, a lost-then-won commit race, and an exhausted one."""
+    from pyspark import StorageLevel
+
+    from stock_etl_pipeline_spark.sinks import acid
+
+    rows = lambda df: sorted((r["k"], r["v"]) for r in df.collect())
+    base = spark.createDataFrame(
+        [(i, f"v{i}") for i in range(40)], "k long, v string"
+    ).repartitionByRange(4, "k")
+    cow, tbl = str(tmp_path / "jb_cow"), str(tmp_path / "jb_tbl")
+    acid.acid_merge_upsert(spark, cow, base, ["k"], file_cow=True)
+    acid.acid_merge_upsert(spark, tbl, base, ["k"])
+
+    def batch(*ks):
+        # the daily batch's lineage shape: parallelized rows + dedup shuffle
+        return spark.createDataFrame(
+            [(k, f"u{k}") for k in ks], "k long, v string"
+        ).dropDuplicates(["k"])
+
+    def merge_both(src, **kw):
+        rep = acid.acid_merge_upsert(spark, cow, src, ["k"], file_cow=True, **kw)
+        acid.acid_merge_upsert(spark, tbl, src, ["k"])
+        assert rows(acid.acid_read(spark, cow)) == rows(acid.acid_read(spark, tbl))
+        return rep
+
+    held = _persisted_rdds(spark)
+    with _counting_jobs(spark) as n:
+        rep = acid.acid_merge_upsert(spark, cow, batch(2, 5), ["k"], file_cow=True)
+    acid.acid_merge_upsert(spark, tbl, batch(2, 5), ["k"])
+    assert rep["files_probed"] == 1 and rep["files_rewritten"] == 1
+    assert n["jobs"] == 7
+    assert _persisted_rdds(spark) == held
+
+    # a caller's own cache is used as-is and stays persisted
+    mine = batch(12, 15).persist()
+    mine.count()
+    held_mine = _persisted_rdds(spark)
+    merge_both(mine)
+    assert mine.storageLevel != StorageLevel.NONE
+    assert _persisted_rdds(spark) == held_mine
+    mine.unpersist()
+    assert _persisted_rdds(spark) == held
+
+    # lost race, then won: the retry reuses the persisted batch and the
+    # call still drops it
+    real = acid._commit_manifest
+    lost = []
+
+    def lose_once(*a, **kw):
+        if not lost:
+            lost.append(1)
+            raise acid.CommitConflict("injected")
+        return real(*a, **kw)
+
+    monkeypatch.setattr(acid, "_commit_manifest", lose_once)
+    rep = merge_both(batch(22, 100))
+    monkeypatch.undo()
+    assert lost and rep["files_rewritten"] == 1
+    assert _persisted_rdds(spark) == held
+
+    # exhausted retries (a dangling marker above current): nothing held
+    fs, jvm = acid._fs(spark, cow)
+    nxt = acid._next_ordinal(spark, cow)
+    fs.createNewFile(acid._hpath(jvm, f"{acid._commits_dir(cow)}/{nxt:020d}"))
+    with pytest.raises(acid.CommitConflict):
+        acid.acid_merge_upsert(
+            spark, cow, batch(33), ["k"], file_cow=True, max_retries=1
+        )
+    assert _persisted_rdds(spark) == held
+
+
+def test_acid_file_cow_date_keys_prune_to_one_file(spark, tmp_path):
+    """Date merge keys carry manifest bounds (ISO strings): on a table of
+    four date-disjoint files, a one-date merge probes exactly one file.
+    A manifest written without date bounds still merges correctly — it
+    just probes every file whose other bounds overlap."""
+    from stock_etl_pipeline_spark.sinks import acid
+
+    days = [dt.date(2024, 5, d) for d in (1, 2, 3, 4)]
+    schema = "date date, symbol string, close double"
+    rows = lambda df: sorted(tuple(r) for r in df.select(
+        "date", "symbol", "close").collect())
+    base = spark.createDataFrame(
+        [(d, s, float(i)) for i, d in enumerate(days) for s in ("A", "B", "C")],
+        schema,
+    ).repartitionByRange(4, "date")
+    keys = ["date", "symbol"]
+    cow, tbl = str(tmp_path / "dk_cow"), str(tmp_path / "dk_tbl")
+    acid.acid_merge_upsert(spark, cow, base, keys, file_cow=True)
+    acid.acid_merge_upsert(spark, tbl, base, keys)
+    man = acid._manifest(spark, cow, 1)
+    assert sorted(s["bounds"]["date"] for s in man["files"].values()) == [
+        [d.isoformat(), d.isoformat()] for d in days
+    ]
+
+    up = spark.createDataFrame(
+        [(days[2], "B", 99.0), (days[2], "Z", 1.0)], schema
+    )
+    rep = acid.acid_merge_upsert(spark, cow, up, keys, file_cow=True)
+    acid.acid_merge_upsert(spark, tbl, up, keys)
+    assert rep["files_probed"] == 1 and rep["files_rewritten"] == 1
+    assert rows(acid.acid_read(spark, cow)) == rows(acid.acid_read(spark, tbl))
+
+    # an older manifest without date bounds: every file is probed (the
+    # symbol bounds all overlap the batch), one still rewrites
+    fs, jvm = acid._fs(spark, cow)
+    cur = acid._current_ordinal(spark, cow)
+    path = acid._snap_dir(cow, cur) + "/_manifest.json"
+    old = acid._read_json_file(fs, jvm, path)
+    for s in old["files"].values():
+        s["bounds"].pop("date", None)
+    acid._write_json_file(fs, jvm, path, old)
+    up2 = spark.createDataFrame([(days[0], "A", 7.0)], schema)
+    rep2 = acid.acid_merge_upsert(spark, cow, up2, keys, file_cow=True)
+    acid.acid_merge_upsert(spark, tbl, up2, keys)
+    assert rep2["files_probed"] == len(old["files"])
+    assert rep2["files_rewritten"] == 1
+    assert rows(acid.acid_read(spark, cow)) == rows(acid.acid_read(spark, tbl))
+
+
+def test_acid_footer_stats_match_aggregate(spark, tmp_path):
+    """New-file stats come from parquet footers: per file, the row count
+    and the long / string / date / double key bounds equal the
+    groupBy(input_file_name) min/max aggregate the footers replaced,
+    wherever the footer has statistics. An all-NULL chunk and a chunk
+    holding NaN (parquet-mr writes no min/max for it) give no bound —
+    absent, never wrong."""
+    from stock_etl_pipeline_spark.sinks import acid
+
+    schema = T.StructType([
+        T.StructField("k", T.LongType()),
+        T.StructField("s", T.StringType()),
+        T.StructField("d", T.DateType()),
+        T.StructField("x", T.DoubleType()),
+        T.StructField("n", T.LongType()),
+    ])
+    keys = ["k", "s", "d", "x", "n"]
+    files = [
+        [(1, "apple", dt.date(2024, 1, 5), 1.5, None),
+         (7, "kiwi", dt.date(2023, 12, 31), -2.25, None),
+         (None, "fig", None, None, None)],
+        [(3, "über", dt.date(2024, 2, 1), float("nan"), None),
+         (-4, "zeta", dt.date(1999, 1, 1), 0.5, None)],
+        [(None, "q", dt.date(2030, 6, 6), 3.0, None)],
+    ]
+    d = str(tmp_path / "footers")
+    for rows in files:
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+            "append").parquet(d)
+
+    aggs = [F.count(F.lit(1)).alias("_rows")]
+    for k in keys:
+        aggs += [F.min(k).alias(f"_lo_{k}"), F.max(k).alias(f"_hi_{k}")]
+    old = {
+        r["_file"].rsplit("/", 1)[-1]: r
+        for r in spark.read.parquet(d)
+        .groupBy(F.input_file_name().alias("_file")).agg(*aggs).collect()
+    }
+    new = acid._footer_stats(spark, d, keys, schema)
+    assert set(new) == set(old) and len(new) == 3
+
+    n_bounds = 0
+    for name, st in new.items():
+        r = old[name]
+        assert st["rows"] == r["_rows"]
+        for k, b in st["bounds"].items():
+            assert b == [acid._bound_value(r[f"_lo_{k}"]),
+                         acid._bound_value(r[f"_hi_{k}"])]
+            n_bounds += 1
+    by_rows = {st["rows"]: st["bounds"] for st in new.values()}
+    assert set(by_rows[3]) == {"k", "s", "d", "x"}  # "n" is all-NULL
+    assert by_rows[3]["d"] == ["2023-12-31", "2024-01-05"]
+    assert set(by_rows[2]) == {"k", "s", "d"}  # NaN chunk: no "x" bound
+    assert by_rows[2]["s"] == ["zeta", "über"]  # UTF-8 byte order
+    assert set(by_rows[1]) == {"s", "d", "x"}  # all-NULL "k"
+    assert n_bounds == 10
 
 
 def test_acid_maintenance_lease_mutual_exclusion(spark, tmp_path):
