@@ -26,6 +26,22 @@ every timed run — cheaper, and drift-fair because of the interleaving.
 Output: one JSON line per cell, then a per-arm summary (min / median / all
 reps) and each arm's median ratio vs the FIRST arm. Medians, not means:
 drift spikes are one-sided.
+
+Whole-benchmark mode, two checkouts (the AB_TREE idea at the granularity
+of ``perfbench/run.py``):
+
+  python scripts/ab.py --perfbench etl_daily --tree parent=../base \
+      --tree change=. --seeds 71-80 [--seconds 8] [--trace 0]
+
+Each seed is one pair: both trees run ``python3 perfbench/run.py
+--workload W --seed N`` from their own root, and the side that runs first
+flips on every pair, so host drift lands on both sides alike. Only the
+runs' two result lines are read. Output: one JSON line per run (its
+metrics plus the summary line's raw pass time ``wall_raw_s`` and mean
+``host_ref_s``, ``correct``, ``failed``/``attempted``), then per metric
+each tree's median and quartiles, the second tree's wins out of the pairs
+(direction from the first tree's BENCHMARK.json, lower otherwise) and
+whether the medians differ by more than the first tree's quartile spread.
 """
 
 from __future__ import annotations
@@ -89,8 +105,105 @@ def run_cell_inproc(spark, registry, arm: dict, sf_dir: str) -> float:
                 os.environ[k] = v
 
 
+def parse_seeds(text: str) -> list[int]:
+    seeds = []
+    for part in text.split(","):
+        lo, _, hi = part.partition("-")
+        seeds.extend(range(int(lo), int(hi or lo) + 1))
+    return seeds
+
+
+def run_perfbench(tree: str, workload: str, seed: int, seconds: str, trace: str) -> dict:
+    cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
+           "--seed", str(seed), "--seconds", seconds, "--trace", trace]
+    res = subprocess.run(cmd, capture_output=True, text=True, cwd=tree, timeout=900)
+    lines = res.stdout.strip().splitlines()
+    try:
+        out, summary = json.loads(lines[-1]), json.loads(lines[-2])
+    except (IndexError, ValueError):
+        sys.stderr.write(res.stdout[-2000:] + res.stderr[-2000:])
+        return {"correct": False, "attempted": 0, "failed": None, "metrics": {},
+                "rc": res.returncode}
+    # wall_s / op_p50_s are scaled by the run's host reference; the raw
+    # pass time and the reference itself tell a code change from a ruler
+    # swing
+    out["metrics"]["wall_raw_s"] = {"value": summary["wall_raw_s"]}
+    out["metrics"]["host_ref_s"] = {"value": statistics.mean(summary["host_ref_s"])}
+    return {**out, "rc": res.returncode}
+
+
+def quartiles(xs: list[float]) -> tuple[float, float, float]:
+    if len(xs) < 2:
+        return xs[0], xs[0], xs[0]
+    q1, q2, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+    return q1, q2, q3
+
+
+def perfbench_main(argv: list[str]) -> int:
+    import argparse
+
+    ap = argparse.ArgumentParser(prog="ab.py --perfbench")
+    ap.add_argument("--perfbench", required=True, metavar="WORKLOAD")
+    ap.add_argument("--tree", action="append", required=True,
+                    help="[label=]path of a checkout; give exactly two")
+    ap.add_argument("--seeds", required=True, help="e.g. 71-80 or 71,73,75")
+    ap.add_argument("--seconds", default="8")
+    ap.add_argument("--trace", default="0")
+    args = ap.parse_args(argv[1:])
+    if len(args.tree) != 2:
+        raise SystemExit("--perfbench needs exactly two --tree entries")
+    trees = []
+    for t in args.tree:
+        label, _, path = t.rpartition("=")
+        path = os.path.abspath(path)
+        trees.append((label or os.path.basename(path), path))
+    if trees[0][0] == trees[1][0]:
+        raise SystemExit(f"duplicate tree labels: {trees[0][0]} (use label=path)")
+    better = {}
+    bench = os.path.join(trees[0][1], "BENCHMARK.json")
+    if os.path.exists(bench):
+        with open(bench) as f:
+            better = {m["name"]: m["better"] for m in json.load(f)["end_to_end"]}
+
+    runs: dict[str, list[dict]] = {label: [] for label, _ in trees}
+    for i, seed in enumerate(parse_seeds(args.seeds)):
+        for pos, (label, path) in enumerate(trees if i % 2 == 0 else trees[::-1]):
+            out = run_perfbench(path, args.perfbench, seed, args.seconds, args.trace)
+            vals = {k: m["value"] for k, m in out["metrics"].items()}
+            runs[label].append({"correct": out["correct"], **vals})
+            print(json.dumps({
+                "pair": i, "seed": seed, "tree": label, "pos": pos,
+                "correct": out["correct"], "failed": out["failed"],
+                "attempted": out["attempted"], "rc": out["rc"], **vals,
+            }), flush=True)
+
+    (la, _), (lb, _) = trees
+    for label in (la, lb):
+        ok = sum(r["correct"] for r in runs[label])
+        print(f"{label}: {ok}/{len(runs[label])} runs correct")
+    names = sorted({k for r in runs[la] for k in r if k != "correct"})
+    print(f"\n{'metric':28s} {la + ' median (q1-q3)':>30s} {lb + ' median (q1-q3)':>30s}"
+          f" {'change':>8s} {'wins':>6s}  beyond-spread")
+    for name in names:
+        pairs = [(a[name], b[name]) for a, b in zip(runs[la], runs[lb])
+                 if name in a and name in b]
+        if not pairs:
+            continue
+        lower = better.get(name, "lower") == "lower"
+        qa, qb = quartiles([a for a, _ in pairs]), quartiles([b for _, b in pairs])
+        wins = sum((b < a) if lower else (b > a) for a, b in pairs)
+        delta = (qb[1] - qa[1]) / qa[1] * 100 if qa[1] else float("nan")
+        beyond = abs(qb[1] - qa[1]) > qa[2] - qa[0]
+        print(f"{name:28s} {qa[1]:12.4f} ({qa[0]:.4f}-{qa[2]:.4f})"
+              f" {qb[1]:12.4f} ({qb[0]:.4f}-{qb[2]:.4f}) {delta:+7.1f}%"
+              f" {wins:3d}/{len(pairs):<2d}  {beyond}")
+    return 0
+
+
 def main() -> int:
     argv = sys.argv
+    if "--perfbench" in argv:
+        return perfbench_main(argv)
     arms = [parse_arm(argv[i + 1]) for i, a in enumerate(argv) if a == "--arm"]
     if len(arms) < 2:
         raise SystemExit("need at least two --arm entries")

@@ -69,6 +69,38 @@ _TYPE_ALIASES: dict[str, T.DataType] = {
 }
 
 
+def frame_from_rows(spark, rows, schema: T.StructType):
+    """Driver-side rows (tuples or Rows, in ``schema``'s field order) → a
+    DataFrame holding the same values ``spark.createDataFrame(rows,
+    schema)`` stores, built through Arrow so the JVM decodes the batch.
+
+    The list path of ``createDataFrame`` parallelizes pickled rows and
+    reserializes them with an identity ``map`` (pyspark ``RDD._reserialize``),
+    so its lineage carries a ``PythonRDD`` and every evaluation runs each
+    partition through a Python worker. An Arrow table's lineage is
+    JVM-only. Each value goes through its field's ``toInternal`` first, so
+    dates become epoch days and timestamps epoch µs exactly as the list
+    path stores them (a naive ``datetime`` read in the process's local
+    time); ``to_arrow_type`` types them ``date32`` and
+    ``timestamp[us, UTC]``, which Spark takes as those instants with no
+    session-zone shift. A NULL in a non-nullable field raises
+    ``ValueError`` (Arrow's cast to the schema) before any Spark job.
+    Flat schemas only.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    cols = list(zip(*rows)) or [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [
+            pa.array([f.toInternal(v) for v in col], type=to_arrow_type(f.dataType))
+            for f, col in zip(schema.fields, cols)
+        ],
+        names=schema.names,
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def build_schema(columns_config: dict[str, dict]) -> T.StructType:
     """dict config → StructType, the Spark twin of the reference's
     ``create_bigquery_schema`` (reference dags/utils/loaders.py:83-104, K10).

@@ -104,9 +104,13 @@ file_cow=True)`` instead publishes a MANIFEST snapshot::
   ranges cannot intersect the batch's are untouched without any read),
   then a column-pruned key scan of only the candidate files semi-joined
   to a broadcast relation of those keys, collecting file names with no
-  shuffle. Untouched files move to the new manifest unchanged; only
-  touched files are rewritten (their rows EXCEPT-merged-keys, union the
-  source) — commit cost scales with TOUCHED files, not table size.
+  shuffle. The key relation is built from the collected rows through
+  Arrow (``schemas.frame_from_rows``), so it is JVM-local: broadcasting
+  it starts no Python worker. So is the empty pinned-schema relation a
+  pure-insert merge reads in place of an empty file list. Untouched
+  files move to the new manifest unchanged; only touched files are
+  rewritten (their rows EXCEPT-merged-keys, union the source) — commit
+  cost scales with TOUCHED files, not table size.
 - Job budget of one merge commit whose batch lineage holds a dedup
   shuffle (the daily batch): 7 Spark jobs — key collect (2), probe
   broadcast and scan (2), rewrite (3); pinned in
@@ -126,6 +130,8 @@ import json
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..schemas import frame_from_rows
 
 
 class CommitConflict(Exception):
@@ -454,7 +460,7 @@ def _read_manifest_files(
     schema = StructType.fromJson(json.loads(manifest["schema"]))
     use = sorted(manifest["files"]) if names is None else sorted(names)
     if not use:
-        return spark.createDataFrame([], schema)
+        return frame_from_rows(spark, [], schema)
     ddir = _data_dir(table)
     return spark.read.schema(schema).parquet(*[f"{ddir}/{n}" for n in use])
 
@@ -923,7 +929,7 @@ def _touched_file_names(
     if not candidates:
         return set(), 0
     scan = _read_manifest_files(spark, table, manifest, candidates)
-    src_keys = spark.createDataFrame(batch, key_df.schema)
+    src_keys = frame_from_rows(spark, batch, key_df.schema)
     hit = (
         scan.select(*keys, F.input_file_name().alias("_file"))
         .join(F.broadcast(src_keys), list(keys), "left_semi")

@@ -5,10 +5,15 @@ Design: API fetching is inherently driver-side at reference scale (a handful
 of symbols, rate-limited HTTP — reference dags/utils/extractors.py:13-144);
 the fetch callable is injected so tests mock it exactly like the reference's
 unit tests (tests/extractors.py:51-65,88-96). The Spark boundary is
-``spark.createDataFrame(rows, RAW_SCHEMA)`` — explicit schema, never
-inferred (SURVEY.md §1.4). At real scale the same canonicalization functions
-feed a ``foreachPartition`` fetcher or a custom DataSource; the per-source
-row shape stays identical.
+``schemas.frame_from_rows(spark, rows, RAW_SCHEMA)`` — explicit schema, never
+inferred (SURVEY.md §1.4) — which hands the rows to the JVM as an Arrow
+table. ``spark.createDataFrame(rows, schema)`` would hold the same values,
+but its list path reserializes the parallelized rows with an identity map
+(pyspark ``RDD._reserialize``), so the batch's lineage carries a
+``PythonRDD`` and every job over it — validation, the MERGE's persist and
+probe — starts Python workers. At real scale the same canonicalization
+functions feed a ``foreachPartition`` fetcher or a custom DataSource; the
+per-source row shape stays identical.
 
 File scans (S3-S5) are thin wrappers that force an explicit schema, because
 ``inferSchema`` costs an extra full read and type drift breaks parity.
@@ -23,7 +28,7 @@ from collections.abc import Callable, Iterable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from ..schemas import RAW_SCHEMA
+from ..schemas import RAW_SCHEMA, frame_from_rows
 
 # Alpha Vantage raw column names → canonical (reference dags/utils/extractors.py:43-50).
 ALPHA_VANTAGE_RENAMES = {
@@ -101,7 +106,7 @@ def extract_alpha_vantage(
         for date_key, rec in payload.items():
             canon = {ALPHA_VANTAGE_RENAMES.get(k, k): v for k, v in rec.items()}
             rows.append(_raw_row(date_key, symbol, canon, "alpha_vantage", stamp))
-    return spark.createDataFrame(rows, RAW_SCHEMA)
+    return frame_from_rows(spark, rows, RAW_SCHEMA)
 
 
 def extract_yahoo_finance(
@@ -130,7 +135,7 @@ def extract_yahoo_finance(
         for rec in records:
             canon = {YAHOO_RENAMES.get(k, k): v for k, v in rec.items()}
             rows.append(_raw_row(canon["date"], symbol, canon, "yahoo_finance", stamp))
-    return spark.createDataFrame(rows, RAW_SCHEMA)
+    return frame_from_rows(spark, rows, RAW_SCHEMA)
 
 
 def from_records(

@@ -1238,6 +1238,29 @@ def test_simhash128_signatures_arrow_matches_relational(spark):
     assert arr == rel and len(arr) == len(_EDGE_DOCS) - 2
 
 
+def test_simhash_arrow_null_token_seam(spark):
+    """The Arrow kernel's ``pd.factorize`` codes a None token as -1, which
+    would silently index the LAST distinct token's digest. None never gets
+    there: NULL, empty and whitespace-only texts are dropped before the
+    kernel (the relational explode emits no row for them either), and the
+    JVM split never yields a NULL element. The strings "None"/"nan" are
+    ordinary tokens on both paths. Spread over three partitions, so some
+    batches hold only dropped docs."""
+    from stock_etl_pipeline_spark.operators import dedup
+
+    docs = [
+        (1, None), (2, ""), (3, "   "), (4, "\t\n "), (5, None),
+        (6, "alpha beta gamma"), (7, "  leading and trailing  "),
+        (8, "None nan NaN null"), (9, "alpha beta gamma"), (10, None),
+    ]
+    d = spark.createDataFrame(docs, "doc_id long, text string").repartition(3)
+    rel = _sorted_rows(dedup.simhash_signatures(d))
+    arr = _sorted_rows(dedup.simhash_signatures_arrow(d))
+    assert arr == rel
+    ids = {r["doc_id"] for r in dedup.simhash_signatures_arrow(d).collect()}
+    assert ids == {6, 7, 8, 9}
+
+
 def test_signatures_arrow_matches_relational_on_corpus(spark, sf_small):
     """Same equivalence over the real sf0.001 documents table (both widths):
     the backends must agree on every doc, not just crafted edges."""

@@ -1382,3 +1382,136 @@ def test_acid_maintenance_lease_corrupt_and_force_broken(spark, tmp_path):
         acid._compact_impl = real_impl
     assert rep["files_compacted"] >= 2  # result not masked by the release
     assert not os.path.exists(acid._lease_path(table))
+
+
+# Values createDataFrame's list path stores in odd ways: NULLs in nullable
+# fields, NaN / -0.0 / extreme doubles and longs, a pre-1970 date,
+# non-ASCII symbols, naive and UTC-aware timestamps, and a naive timestamp
+# in America/New_York's 2024 spring-forward gap.
+_ODD_RAW_ROWS = [
+    (dt.date(2024, 5, 31), "AAPL", 1.5, None, float("nan"), -0.0, 2**62,
+     "alpha_vantage", STAMP),
+    (dt.date(1950, 1, 2), "Ünï€ 株", 1e308, -1e308, None, 5e-324, None,
+     "yahoo_finance", dt.datetime(2024, 3, 10, 2, 30)),
+    (dt.date(1969, 12, 31), "x", -0.0, 0.0, float("-inf"), 0.1, -(2**63),
+     "alpha_vantage", dt.datetime(2024, 6, 1, 12, 0, 0, 7, tzinfo=dt.timezone.utc)),
+    (dt.date(2024, 11, 3), "", None, None, None, float("inf"), 0,
+     "yahoo_finance", dt.datetime(1960, 1, 1, 0, 0)),
+]
+
+
+def _lineage(df) -> str:
+    """The executed RDD lineage of ``df`` (shuffle map sides included)."""
+    return df._jdf.queryExecution().toRdd().toDebugString()
+
+
+@pytest.mark.parametrize("zone", ["process", "session"])
+def test_frame_from_rows_matches_create_dataframe(spark, zone):
+    """``schemas.frame_from_rows`` stores exactly the values the list path
+    of ``createDataFrame(rows, schema)`` does (repr-exact), under a
+    non-UTC process TZ and under a non-UTC session time zone: RAW_SCHEMA
+    rows with odd values, Row objects of the daily merge-key schema, and
+    an empty row list."""
+    import os
+    import time
+
+    from stock_etl_pipeline_spark.operators.merge import MERGE_KEYS
+    from stock_etl_pipeline_spark.schemas import frame_from_rows
+
+    saved_tz = os.environ.get("TZ")
+    saved_session = spark.conf.get("spark.sql.session.timeZone")
+    if zone == "process":
+        os.environ["TZ"] = "America/New_York"
+        time.tzset()
+    else:
+        spark.conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
+    try:
+        def same(rows, schema):
+            want = spark.createDataFrame(rows, schema)
+            got = frame_from_rows(spark, rows, schema)
+            assert got.schema == want.schema == schema
+            assert repr(got.collect()) == repr(want.collect())
+            assert "PythonRDD" not in _lineage(got)
+
+        same(_ODD_RAW_ROWS, RAW_SCHEMA)
+        raw = spark.createDataFrame(_ODD_RAW_ROWS, RAW_SCHEMA)
+        key_rows = raw.select(*MERGE_KEYS).collect()
+        same(key_rows, raw.select(*MERGE_KEYS).schema)
+        same([], RAW_SCHEMA)
+    finally:
+        if saved_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = saved_tz
+        time.tzset()
+        spark.conf.set("spark.sql.session.timeZone", saved_session)
+
+
+def test_extract_null_symbol_raises_before_any_job(spark):
+    """A None symbol in a NOT NULL field fails on the driver with a
+    ValueError, as createDataFrame's schema check did, and no Spark job
+    runs."""
+    with _counting_jobs(spark) as n:
+        with pytest.raises(ValueError):
+            sources.extract_alpha_vantage(
+                spark, [None], lambda s: AV_PAYLOAD, extracted_at=STAMP
+            )
+    assert n["jobs"] == 0
+
+
+def test_daily_path_starts_no_python_worker(spark, tmp_path, monkeypatch):
+    """Driver-side rows on the daily path enter Spark through Arrow, so no
+    lineage on it holds a PythonRDD (a Python worker per partition per
+    evaluation): both extractors' outputs, the transformed and merged
+    batch, the file-COW probe's broadcast key relation, and the empty
+    pinned-schema relation a pure-insert merge reads."""
+    from stock_etl_pipeline_spark.operators.merge import MERGE_KEYS, merge_datasets
+    from stock_etl_pipeline_spark.operators.transform import transform_stock_data
+    from stock_etl_pipeline_spark.sinks import acid
+
+    def day(payload, records):
+        a = sources.extract_alpha_vantage(
+            spark, ["AAPL", "MSFT"], lambda s: payload, extracted_at=STAMP)
+        y = sources.extract_yahoo_finance(
+            spark, ["AAPL"], lambda s: records, extracted_at=STAMP)
+        assert "PythonRDD" not in _lineage(a)
+        assert "PythonRDD" not in _lineage(y)
+        merged = merge_datasets([
+            transform_stock_data(a, processed_at=STAMP),
+            transform_stock_data(y, processed_at=STAMP),
+        ])
+        assert "PythonRDD" not in _lineage(merged)
+        return merged
+
+    first = day(AV_PAYLOAD, YF_RECORDS)
+    built = []
+    real = acid.frame_from_rows
+
+    def recording(*a, **kw):
+        built.append(real(*a, **kw))
+        return built[-1]
+
+    monkeypatch.setattr(acid, "frame_from_rows", recording)
+    table = str(tmp_path / "daily")
+    acid.acid_merge_upsert(spark, table, first, MERGE_KEYS, file_cow=True)
+    assert built == []  # the first commit neither probes nor merges
+
+    # a restatement of the same days: the probe's key relation
+    restated = {d: {**r, "4. close": "1.0"} for d, r in AV_PAYLOAD.items()}
+    rep = acid.acid_merge_upsert(
+        spark, table, day(restated, YF_RECORDS), MERGE_KEYS, file_cow=True)
+    assert rep["files_rewritten"] == 1
+    (keys,) = built
+    assert keys.columns == MERGE_KEYS and keys.count() == 6
+    assert "PythonRDD" not in _lineage(keys)
+
+    # a later day outside every file's bounds: the pure-insert relation
+    built.clear()
+    later = [{**r, "Date": "2024-06-03"} for r in YF_RECORDS[:1]]
+    rep = acid.acid_merge_upsert(
+        spark, table, day({"2024-06-03": AV_PAYLOAD["2024-05-31"]}, later),
+        MERGE_KEYS, file_cow=True)
+    assert rep["files_rewritten"] == 0 and rep["rows_loaded"] == 9
+    (empty,) = built
+    assert empty.count() == 0
+    assert "PythonRDD" not in _lineage(empty)
